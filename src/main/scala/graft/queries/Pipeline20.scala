@@ -534,10 +534,14 @@ object Pipeline20 {
         // insert-then-delete nets to a no-op delete on the replica).
         // One delete-merge + one upsert-merge lands byte-equal to the
         // version-by-version replay, and the versions_replayed witness
-        // still counts the feed's versions.
+        // still counts the feed's versions. Within one version an
+        // upsert outranks a delete (a delete+insert pair, e.g. from an
+        // overwrite, nets to the insert), the order the per-version
+        // replay applied them in — so the pick never ties.
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_orderkey"))
-          .orderBy(col("_commit_version").desc)
+          .orderBy(col("_commit_version").desc,
+            (col("_change_type") === "delete").asc)
         val net = feed.filter(col("_change_type")
             .isin("delete", "update_postimage", "insert"))
           .withColumn("__rn", row_number().over(w))

@@ -791,61 +791,44 @@ private[sources] class StagedCommitLogTable(spark: SparkSession,
     val segs = staged.iterator().asScala.toSeq
     val schemaB64 = CommitLog.encodeSchema(declaredSchema)
     val pb = Some(partitionCols.mkString(","))
-    var attempt = 0
-    while (attempt < 20) {
-      CommitLog.snapshot(spark, path) match {
-        case None =>
-          if (replace && !orCreate) {
-            abortStagedChanges()
-            throw new NoSuchTableException(ident)
-          }
-          val snap = CommitLog.Snapshot(1L, segs, 0L, "ctas",
-            schema = Some(schemaB64), partitionBy = pb,
-            constraints =
-              Some(CommitLog.encodeConstraints(Map.empty)))
-          if (CommitLog.tryPublish(spark, path, snap)) {
-            reconcileMarker(); return
-          }
-          // lost v1 to a concurrent creator: CREATE fails loudly,
-          // CREATE OR REPLACE retries as a replace of the winner
-          if (!replace) {
-            abortStagedChanges()
-            throw new TableAlreadyExistsException(ident)
-          }
-        case Some(cur) =>
-          if (!replace) {
-            abortStagedChanges()
-            throw new TableAlreadyExistsException(ident)
-          }
-          // the new definition starts clean: the replace commit
-          // ITSELF records the explicit-empty constraint set (a kept
-          // rule could reference columns the new schema dropped) —
-          // atomic with the publish, so no crash window can strand
-          // the old definition's rules on the new schema
-          val snap = CommitLog.Snapshot(cur.version + 1L, segs,
-            cur.version, "replace", schema = Some(schemaB64),
-            partitionBy = pb,
-            constraints =
-              Some(CommitLog.encodeConstraints(Map.empty)),
-            // identity high-water marks reset the same way: without
-            // the explicit-empty field the publish would INHERIT the
-            // replaced table's marks, and a re-declared identity
-            // column would start allocating from the dead table's
-            // mark instead of its declared START
-            identity =
-              Some(CommitLog.encodeConstraints(Map.empty)))
-          if (CommitLog.tryPublish(spark, path, snap, Some(cur))) {
-            // legacy side-file cleanup only (ignored once the field
-            // exists); losing this to a crash changes nothing
-            CommitLog.clearConstraints(spark, path)
-            reconcileMarker(); return
-          }
-      }
-      attempt += 1
+    // a refusal or an exhausted budget drops the staged segments
+    CommitLog.transact(spark, path,
+        "StagedCommitLogTable.commitStagedChanges", stagedOnce = segs) {
+      case None =>
+        if (replace && !orCreate) throw new NoSuchTableException(ident)
+        CommitLog.Step.publish(CommitLog.Snapshot(1L, segs, 0L, "ctas",
+          schema = Some(schemaB64), partitionBy = pb,
+          constraints = Some(CommitLog.encodeConstraints(Map.empty))))(
+          reconcileMarker())
+      case Some(cur) =>
+        // a table that exists — from the start, or because a
+        // concurrent creator won v1 — fails a plain CREATE loudly;
+        // CREATE OR REPLACE replaces it (the winner included)
+        if (!replace) throw new TableAlreadyExistsException(ident)
+        // the new definition starts clean: the replace commit
+        // ITSELF records the explicit-empty constraint set (a kept
+        // rule could reference columns the new schema dropped) —
+        // atomic with the publish, so no crash window can strand
+        // the old definition's rules on the new schema
+        val snap = CommitLog.Snapshot(cur.version + 1L, segs,
+          cur.version, "replace", schema = Some(schemaB64),
+          partitionBy = pb,
+          constraints =
+            Some(CommitLog.encodeConstraints(Map.empty)),
+          // identity high-water marks reset the same way: without
+          // the explicit-empty field the publish would INHERIT the
+          // replaced table's marks, and a re-declared identity
+          // column would start allocating from the dead table's
+          // mark instead of its declared START
+          identity =
+            Some(CommitLog.encodeConstraints(Map.empty)))
+        CommitLog.Step.publish(snap) {
+          // legacy side-file cleanup only (ignored once the field
+          // exists); losing this to a crash changes nothing
+          CommitLog.clearConstraints(spark, path)
+          reconcileMarker()
+        }
     }
-    abortStagedChanges()
-    throw new java.io.IOException(
-      s"commitlog CTAS/RTAS: lost the version race 20 times at $path")
   }
 
   /** Post-publish, reconcile the derivative `_partition.json` cache
@@ -859,10 +842,7 @@ private[sources] class StagedCommitLogTable(spark: SparkSession,
 
   override def abortStagedChanges(): Unit = {
     import scala.jdk.CollectionConverters._
-    val f = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    staged.iterator().asScala.foreach(s =>
-      f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
+    CommitLog.discard(spark, path, staged.iterator().asScala.toSeq)
   }
 }
 

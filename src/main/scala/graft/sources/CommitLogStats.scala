@@ -572,31 +572,17 @@ object CommitLogStats {
   // ---- stats-carrying commits -----------------------------------------
 
   /** [[CommitLog.append]] with a stats sidecar on the new segment.
-    * Identical OCC publish loop; the sidecar is in place before the
-    * first manifest names the segment. */
+    * Same stage-once publish ([[CommitLog.publishStaged]]); the
+    * sidecar is in place before the first manifest names the
+    * segment. */
   def appendWithStats(spark: SparkSession, table: String, df: DataFrame,
-      statsCols: Seq[String], maxRetries: Int = 20): Long = {
-    val (seg, gated0) = CommitLog.writeSegmentGated(spark, table, df)
-    var gated = gated0
+      statsCols: Seq[String]): Long = {
+    val (seg, gated) = CommitLog.writeSegmentGated(spark, table, df)
     // the segment's file bytes carry physical names (writeSegment's
     // mapping fold); the sidecar keys must match them
     writeSidecar(spark, seg, statsCols, physicalKeyFn(spark, table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table)
-      gated = CommitLog.regateOnConstraintChange(spark, table,
-        Seq(seg), gated, cur)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
-        cur.fold(Seq.empty[String])(_.segments) :+ seg,
-        cur.fold(0L)(_.version), "append",
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendWithStats: lost the version race " +
-        s"$maxRetries times at $table")
+    CommitLog.publishStaged(spark, table, "CommitLogStats.appendWithStats",
+      Seq(seg), gated = Some(gated)).get
   }
 
   /** SLICED APPEND: land a frame carrying a caller-computed integer
@@ -611,8 +597,7 @@ object CommitLogStats {
     * so [[planSkipping]] and the SQL read path prune exactly as for
     * the loop-built layout. */
   def appendSliced(spark: SparkSession, table: String, df: DataFrame,
-      sliceCol: String, statsCols: Seq[String],
-      maxRetries: Int = 20): Long = {
+      sliceCol: String, statsCols: Seq[String]): Long = {
     require(df.schema.fieldNames.contains(sliceCol),
       s"appendSliced: slice column '$sliceCol' absent from frame")
     require(df.schema(sliceCol).dataType == IntegerType,
@@ -630,7 +615,7 @@ object CommitLogStats {
         curSnap.flatMap(_.schema).map(CommitLog.decodeSchema)),
       curSnap.flatMap(_.schema).map(CommitLog.decodeSchema)).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var gated = CommitLog.constraintsOf(spark, table, curSnap)
+    val gated = CommitLog.constraintsOf(spark, table, curSnap)
     val (segs, idExtents) =
       try {
         // same omission/identity refusals as writeSegmentGated — this
@@ -648,29 +633,11 @@ object CommitLogStats {
         (writeBucketedSegments(spark, table, persisted, sliceCol,
           Seq.empty, statsCols).map(_._2), ext)
       } finally persisted.unpersist()
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table)
-      gated = CommitLog.regateOnConstraintChange(spark, table,
-        segs, gated, cur)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
-        cur.fold(Seq.empty[String])(_.segments) ++ segs,
-        cur.fold(0L)(_.version), "append",
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
-        // provided BY DEFAULT identity values auto-SYNC the marks
-        // (re-folded per retry against the fresh snapshot — safe,
-        // marks only advance)
-        identity = if (idExtents.isEmpty) None
-          else Some(CommitLog.encodeIdentityMarks(CommitLog.syncMarks(
-            CommitLog.decodeIdentity(cur.flatMap(_.identity)),
-            idExtents))))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendSliced: lost the version race " +
-        s"$maxRetries times at $table")
+    // provided BY DEFAULT identity values auto-SYNC the marks
+    // (re-folded per attempt against the fresh snapshot — safe, marks
+    // only advance)
+    CommitLog.publishStaged(spark, table, "CommitLogStats.appendSliced",
+      segs, gated = Some(gated), idExtents = idExtents).get
   }
 
   /** PARTITIONED APPEND: land `df` as one segment PER DISTINCT
@@ -698,31 +665,12 @@ object CommitLogStats {
     * non-partition columns. */
   def appendPartitioned(spark: SparkSession, table: String,
       df: DataFrame, partitionCols: Seq[String],
-      statsCols: Seq[String] = Seq.empty,
-      maxRetries: Int = 20): Long = {
-    val (segs, gated0, idExtents) = stagePartitionedGated(spark, table,
+      statsCols: Seq[String] = Seq.empty): Long = {
+    val (segs, gated, idExtents) = stagePartitionedGated(spark, table,
       df, partitionCols, statsCols)
-    var gated = gated0
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table)
-      gated = CommitLog.regateOnConstraintChange(spark, table,
-        segs, gated, cur)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
-        cur.fold(Seq.empty[String])(_.segments) ++ segs,
-        cur.fold(0L)(_.version), "append",
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
-        identity = if (idExtents.isEmpty) None
-          else Some(CommitLog.encodeIdentityMarks(CommitLog.syncMarks(
-            CommitLog.decodeIdentity(cur.flatMap(_.identity)),
-            idExtents))))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return v
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendPartitioned: lost the version race " +
-        s"$maxRetries times at $table")
+    CommitLog.publishStaged(spark, table,
+      "CommitLogStats.appendPartitioned", segs, gated = Some(gated),
+      idExtents = idExtents).get
   }
 
   /** [[appendPartitioned]] with [[CommitLog.appendTxn]]'s
@@ -734,42 +682,17 @@ object CommitLogStats {
     * its staged segments. Returns None when skipped. */
   def appendPartitionedTxn(spark: SparkSession, table: String,
       df: DataFrame, partitionCols: Seq[String], appId: String,
-      batchId: Long, statsCols: Seq[String] = Seq.empty,
-      maxRetries: Int = 20): Option[Long] = {
+      batchId: Long, statsCols: Seq[String] = Seq.empty): Option[Long] = {
     if (CommitLog.lastTxn(spark, table, appId).exists(_ >= batchId))
       return None
-    val (segs, gated0, idExtents) = stagePartitionedGated(spark, table,
+    val (segs, gated, idExtents) = stagePartitionedGated(spark, table,
       df, partitionCols, statsCols)
-    var gated = gated0
-    var attempt = 0
-    while (attempt < maxRetries) {
-      if (CommitLog.lastTxn(spark, table, appId).exists(_ >= batchId)) {
-        // a concurrent replica of the same query won the race with
-        // this very batch: drop the orphaned segments, report skipped
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-        return None
-      }
-      val cur = CommitLog.snapshot(spark, table)
-      gated = CommitLog.regateOnConstraintChange(spark, table,
-        segs, gated, cur)
-      val v = cur.fold(1L)(_.version + 1L)
-      val snap = CommitLog.Snapshot(v,
-        cur.fold(Seq.empty[String])(_.segments) ++ segs,
-        cur.fold(0L)(_.version), "streaming-append",
-        txnApp = Some(appId), txnBatch = Some(batchId),
-        schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv),
-        identity = if (idExtents.isEmpty) None
-          else Some(CommitLog.encodeIdentityMarks(CommitLog.syncMarks(
-            CommitLog.decodeIdentity(cur.flatMap(_.identity)),
-            idExtents))))
-      if (CommitLog.tryPublish(spark, table, snap, cur)) return Some(v)
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"CommitLogStats.appendPartitionedTxn: lost the version race " +
-        s"$maxRetries times at $table")
+    // a concurrent replica of the same query that won with this very
+    // batch drops the staged segments and reports skipped (None)
+    CommitLog.publishStaged(spark, table,
+      "CommitLogStats.appendPartitionedTxn", segs,
+      op = "streaming-append", gated = Some(gated),
+      txn = Some((appId, batchId)), idExtents = idExtents)
   }
 
   /** [[appendPartitioned]]'s staging step alone: land `df` as one
@@ -962,15 +885,12 @@ object CommitLogStats {
     * too: a vectored delete losing to a compact rebases onto the
     * rewritten segment set inside its own OCC loop. */
   def compactClustered(spark: SparkSession, table: String,
-      clusterCols: Seq[String], nSegments: Int, statsCols: Seq[String],
-      maxRetries: Int = 20): Long = {
+      clusterCols: Seq[String], nSegments: Int,
+      statsCols: Seq[String]): Long = {
     require(nSegments >= 1, "nSegments must be >= 1")
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactClustered: nothing committed at $table"))
+    CommitLog.transactExisting(spark, table,
+        "CommitLogStats.compactClustered") { cur =>
       val df = CommitLog.readLive(spark, cur)
       // rank + total in ONE pass (the offset fold already counts;
       // a separate count() re-read the whole ranked relation)
@@ -988,16 +908,9 @@ object CommitLogStats {
           orderWithin = clusterCols.map(col)).map(_._2)
         val snap = CommitLog.Snapshot(cur.version + 1L, segs,
           cur.version, "compact", schema = cur.schema)
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur))) return snap.version
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally bucketed.unpersist()
-      attempt += 1
+        CommitLog.Step.publish(snap, segs)(snap.version)
+      } finally bucketed.unpersist(): Unit
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactClustered: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** Stage `df` range-clustered on `clusterCols` and publish it as a
@@ -1008,12 +921,14 @@ object CommitLogStats {
     * never re-read what you just wrote). Records the (txnApp,
     * txnBatch) exactly-once stamp when given. Refuses on an EXISTING
     * table: a content replace must go through overwriteWhere's
-    * CDC/constraint path. */
+    * CDC/constraint path — re-asserted on EVERY attempt, so a
+    * concurrent creator that wins v1 makes this build drop its staged
+    * segments and throw (publishing them on top of the winner would
+    * duplicate its rows). */
   private[graft] def installClustered(spark: SparkSession,
       table: String, df: DataFrame, clusterCols: Seq[String],
       nSegments: Int, statsCols: Seq[String],
-      txn: Option[(String, Long)] = None,
-      maxRetries: Int = 20): Long = {
+      txn: Option[(String, Long)] = None): Long = {
     require(nSegments >= 1, "nSegments must be >= 1")
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
     require(CommitLog.currentVersion(spark, table).isEmpty,
@@ -1030,23 +945,14 @@ object CommitLogStats {
       val segs = writeBucketedSegments(spark, table, bucketed,
         "__bucket", Seq("__rn"), statsCols,
         orderWithin = clusterCols.map(col)).map(_._2)
-      var attempt = 0
-      while (attempt < maxRetries) {
-        val cur = CommitLog.snapshot(spark, table)
-        val snap = CommitLog.Snapshot(cur.fold(1L)(_.version + 1L),
-          segs, cur.fold(0L)(_.version), "append",
-          txnApp = txn.map(_._1), txnBatch = txn.map(_._2),
-          schema = cur.flatMap(_.schema), dv = cur.flatMap(_.dv))
-        if (CommitLog.tryPublish(spark, table, snap, cur))
-          return snap.version
-        attempt += 1
+      CommitLog.transact(spark, table, "CommitLogStats.installClustered",
+          stagedOnce = segs) { cur =>
+        cur.foreach(c => throw new IllegalStateException(
+          s"CommitLogStats.installClustered: $table was created " +
+            s"concurrently (v${c.version}) — build not published"))
+        CommitLog.Step.publish(CommitLog.Snapshot(1L, segs, 0L, "append",
+          txnApp = txn.map(_._1), txnBatch = txn.map(_._2)))(1L)
       }
-      val f = fs(spark, table)
-      segs.foreach(s =>
-        f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      throw new java.io.IOException(
-        s"CommitLogStats.installClustered: lost the version race " +
-          s"$maxRetries times at $table")
     } finally bucketed.unpersist(): Unit
   }
 
@@ -1076,8 +982,7 @@ object CommitLogStats {
     * (committedVersion, segmentsRewritten, segmentsKept). */
   def compactClusteredIncremental(spark: SparkSession, table: String,
       clusterCols: Seq[String], targetRowsPerSegment: Long,
-      statsCols: Seq[String], maxDepth: Int = 2,
-      maxRetries: Int = 20): (Long, Int, Int) = {
+      statsCols: Seq[String], maxDepth: Int = 2): (Long, Int, Int) = {
     require(clusterCols.nonEmpty, "clusterCols must be non-empty")
     require(targetRowsPerSegment > 0, "targetRowsPerSegment must be > 0")
     require(maxDepth >= 2,
@@ -1088,12 +993,8 @@ object CommitLogStats {
         s"cluster column '$rangeCol' — without its sidecar every " +
         "rewritten segment is opaque to the NEXT call, which would " +
         "rewrite the whole table every run instead of converging")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactClusteredIncremental: nothing " +
-            s"committed at $table"))
+    CommitLog.transactExisting(spark, table,
+        "CommitLogStats.compactClusteredIncremental") { cur =>
       // sidecar ranges; a segment without a sidecar or the column has
       // an unknowable range → must rewrite. A segment whose range
       // column is ALL NULL is its own class: invisible to range
@@ -1155,53 +1056,50 @@ object CommitLogStats {
         m
       }
       if (opaque.isEmpty && maxD <= maxDepth)
-        return (cur.version, 0, cur.segments.size)
-      // interval scheduling: keep a maximum chain of segments with
-      // disjoint INTERIORS — a boundary-value tie is allowed only for
-      // a non-degenerate newcomer (matching the sweep): a [v,v]
-      // segment repeating the chain's current max is a REDUCIBLE
-      // stack member and must go to the rewrite set to be merged
-      val chain = scala.collection.mutable.ArrayBuffer.empty[String]
-      var lastMax: Option[Any] = None
-      known.sortWith((a, b) => cmp(a._2, a._4, b._4) < 0).foreach {
-        case (seg, _, mn, mx) =>
-          val admit = lastMax.forall { lm =>
-            val c = cmp(tag, mn, lm)
-            c > 0 || (c == 0 && cmp(tag, mx, mn) > 0)
-          }
-          if (admit) { chain += seg; lastMax = Some(mx) }
+        CommitLog.Step.Done((cur.version, 0, cur.segments.size))
+      else {
+        // interval scheduling: keep a maximum chain of segments with
+        // disjoint INTERIORS — a boundary-value tie is allowed only for
+        // a non-degenerate newcomer (matching the sweep): a [v,v]
+        // segment repeating the chain's current max is a REDUCIBLE
+        // stack member and must go to the rewrite set to be merged
+        val chain = scala.collection.mutable.ArrayBuffer.empty[String]
+        var lastMax: Option[Any] = None
+        known.sortWith((a, b) => cmp(a._2, a._4, b._4) < 0).foreach {
+          case (seg, _, mn, mx) =>
+            val admit = lastMax.forall { lm =>
+              val c = cmp(tag, mn, lm)
+              c > 0 || (c == 0 && cmp(tag, mx, mn) > 0)
+            }
+            if (admit) { chain += seg; lastMax = Some(mx) }
+        }
+        val kept = chain.toSet ++ allNull
+        val rewrite = cur.segments.filterNot(kept)
+        if (rewrite.isEmpty)
+          CommitLog.Step.Done((cur.version, 0, cur.segments.size))
+        else {
+          val df = CommitLog.readLive(spark, cur, Some(rewrite))
+          val (ranked, total) = graft.operators.DistributedRank
+            .globalRowNumberCounted(df, clusterCols.map(col), "__rn")
+          val n = math.max(1L, total)
+          val nSegments = math.max(1L,
+            (n + targetRowsPerSegment - 1) / targetRowsPerSegment).toInt
+          val bucketed = ranked.withColumn("__bucket",
+            floor(((col("__rn") - 1L) * nSegments) / lit(n))
+              .cast("int")).persist()
+          try {
+            val segs = writeBucketedSegments(spark, table, bucketed,
+              "__bucket", Seq("__rn"), statsCols,
+              orderWithin = clusterCols.map(col)).map(_._2)
+            val snap = CommitLog.Snapshot(cur.version + 1L,
+              cur.segments.filter(kept) ++ segs,
+              cur.version, "compact", schema = cur.schema, dv = cur.dv)
+            CommitLog.Step.publish(snap, segs)(
+              (snap.version, rewrite.size, kept.size))
+          } finally bucketed.unpersist(): Unit
+        }
       }
-      val kept = chain.toSet ++ allNull
-      val rewrite = cur.segments.filterNot(kept)
-      if (rewrite.isEmpty)
-        return (cur.version, 0, cur.segments.size)
-      val df = CommitLog.readLive(spark, cur, Some(rewrite))
-      val (ranked, total) = graft.operators.DistributedRank
-        .globalRowNumberCounted(df, clusterCols.map(col), "__rn")
-      val n = math.max(1L, total)
-      val nSegments = math.max(1L,
-        (n + targetRowsPerSegment - 1) / targetRowsPerSegment).toInt
-      val bucketed = ranked.withColumn("__bucket",
-        floor(((col("__rn") - 1L) * nSegments) / lit(n))
-          .cast("int")).persist()
-      try {
-        val segs = writeBucketedSegments(spark, table, bucketed,
-          "__bucket", Seq("__rn"), statsCols,
-          orderWithin = clusterCols.map(col)).map(_._2)
-        val snap = CommitLog.Snapshot(cur.version + 1L,
-          cur.segments.filter(kept) ++ segs,
-          cur.version, "compact", schema = cur.schema, dv = cur.dv)
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur)))
-          return (snap.version, rewrite.size, kept.size)
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally bucketed.unpersist()
-      attempt += 1
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactClusteredIncremental: lost the version " +
-        s"race $maxRetries times at $table")
   }
 
   /** Z-ORDER OPTIMIZE: [[compactClustered]]'s 2-D sibling — segments
@@ -1217,10 +1115,9 @@ object CommitLogStats {
     * the q123 tier). */
   def compactZOrder(spark: SparkSession, table: String,
       xCol: String, yCol: String, tieBreak: Seq[String],
-      nSegments: Int, statsCols: Seq[String],
-      maxRetries: Int = 20): Long =
+      nSegments: Int, statsCols: Seq[String]): Long =
     compactZOrderN(spark, table, Seq(xCol, yCol), tieBreak,
-      nSegments, statsCols, maxRetries = maxRetries)
+      nSegments, statsCols)
 
   /** N-DIMENSIONAL [[compactZOrder]]: segments range-disjoint in the
     * N-way Morton order ([[graft.queries.Pipeline10.zOrderN]] — bit
@@ -1236,17 +1133,13 @@ object CommitLogStats {
     * OPTIMIZE. */
   def compactZOrderN(spark: SparkSession, table: String,
       zCols: Seq[String], tieBreak: Seq[String],
-      nSegments: Int, statsCols: Seq[String], bits: Int = 0,
-      maxRetries: Int = 20): Long = {
+      nSegments: Int, statsCols: Seq[String], bits: Int = 0): Long = {
     require(nSegments >= 1, "nSegments must be >= 1")
     require(zCols.size >= 2,
       s"compactZOrderN: need >= 2 z-order columns, got ${zCols.size}")
     val b = if (bits > 0) bits else 62 / zCols.size
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactZOrder: nothing committed at $table"))
+    CommitLog.transactExisting(spark, table,
+        "CommitLogStats.compactZOrder") { cur =>
       val df = CommitLog.readLive(spark, cur)
         .withColumn("__z", graft.queries.Pipeline10.zOrderN(
           zCols.map(col), b))
@@ -1262,16 +1155,9 @@ object CommitLogStats {
           "__bucket", Seq("__z", "__rn"), statsCols).map(_._2)
         val snap = CommitLog.Snapshot(cur.version + 1L, segs,
           cur.version, "compact", schema = cur.schema)
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur))) return snap.version
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally bucketed.unpersist()
-      attempt += 1
+        CommitLog.Step.publish(snap, segs)(snap.version)
+      } finally bucketed.unpersist(): Unit
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactZOrder: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** KEY-BUCKETED OPTIMIZE: rewrite the snapshot as `nBuckets`
@@ -1366,8 +1252,7 @@ object CommitLogStats {
   }
 
   def compactBucketed(spark: SparkSession, table: String,
-      keys: Seq[String], nBuckets: Int, statsCols: Seq[String],
-      maxRetries: Int = 20): Long = {
+      keys: Seq[String], nBuckets: Int, statsCols: Seq[String]): Long = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
     require(keys.nonEmpty, "keys must be non-empty")
     // canonical layout order: two tables bucketed on the same key SET
@@ -1375,11 +1260,8 @@ object CommitLogStats {
     // positional expression compare lines up
     val ckeys = keys.sortBy(_.toLowerCase)
     val ns = gridNs(nBuckets, ckeys.size)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = CommitLog.snapshot(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"CommitLogStats.compactBucketed: nothing committed at $table"))
+    CommitLog.transactExisting(spark, table,
+        "CommitLogStats.compactBucketed") { cur =>
       val df = CommitLog.readLive(spark, cur)
         .withColumn("__bucket", gridBucketCol(ckeys, ns))
         .persist()
@@ -1397,16 +1279,9 @@ object CommitLogStats {
           cur.version, "compact", schema = cur.schema,
           bucket = Some(CommitLog.encodeBucketSpec(ckeys, ns,
             bySeg)))
-        if (CommitLog.tryPublish(spark, table, snap, Some(cur))) return snap.version
-        val f = fs(spark, table)
-        segs.foreach(s =>
-          f.delete(new org.apache.hadoop.fs.Path(s), true): Unit)
-      } finally df.unpersist()
-      attempt += 1
+        CommitLog.Step.publish(snap, segs)(snap.version)
+      } finally df.unpersist(): Unit
     }
-    throw new java.io.IOException(
-      s"CommitLogStats.compactBucketed: lost the version race " +
-        s"$maxRetries times at $table")
   }
 
   /** Stage a DML rewrite PRESERVING the table's bucketed layout: when

@@ -38,9 +38,10 @@ object JobCount {
       .filter { case (n, _) => re.findFirstIn(n).isDefined }
       .foreach { case (name, q) =>
         (1 to runs).foreach { r =>
-          // listener events post asynchronously — drain before and
-          // after each run so counts attribute to the right query
-          Thread.sleep(1000)
+          // listener events post asynchronously — drain the bus before
+          // and after each run so counts attribute to the right query
+          org.apache.spark.GraftListenerBus.drain(spark.sparkContext,
+            10000)
           nJobs.set(0); nStages.set(0); nTasks.set(0)
           spark.sparkContext.addSparkListener(listener)
           val t0 = System.nanoTime()
@@ -51,7 +52,8 @@ object JobCount {
             System.err.println(s"[jobcount] $name failed: $e"); false
           }
           val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(1000)
+          org.apache.spark.GraftListenerBus.drain(spark.sparkContext,
+            10000)
           spark.sparkContext.removeSparkListener(listener)
           spark.catalog.clearCache()
           if (ok) println(f"JOBCOUNT $name run=$r jobs=${nJobs.get}%d " +

@@ -3038,6 +3038,180 @@ class CommitLogSpec extends AnyFunSuite {
     rm(t)
   }
 
+  /** A create-if-absent store over the local filesystem (link(2) of a
+    * fully written temp file — the default store's primitive) that
+    * LOSES the first `k` manifest creates without writing anything, as
+    * if a concurrent writer had taken each version; checkpoint creates
+    * always pass through. Returns the store and its lost-create count. */
+  private def losingStore(k: Int)
+      : (CommitLog.ManifestStore, java.util.concurrent.atomic.AtomicInteger) = {
+    val lost = new java.util.concurrent.atomic.AtomicInteger(0)
+    val store = new CommitLog.ManifestStore {
+      override def createIfAbsent(dst: String,
+          content: Array[Byte]): Boolean =
+        if (dst.endsWith(".manifest") && lost.get() < k) {
+          lost.incrementAndGet(): Unit
+          false
+        } else CommitLogSpec.linkCreate(dst, content)
+    }
+    (store, lost)
+  }
+
+  /** Directories under `<t>/<sub>` that no retained version names —
+    * debris a lost OCC attempt must never leave behind. */
+  private def unreferenced(t: String, sub: String): Set[String] = {
+    val snaps = CommitLog.snapshotsAsc(spark, t)
+    val named = snaps.flatMap(s => s.segments ++ s.changes ++ s.dv)
+      .map(p => new java.io.File(p).getCanonicalPath).toSet
+    Option(new java.io.File(s"$t/$sub").listFiles).toSeq.flatten
+      .filter(_.isDirectory).map(_.getCanonicalPath).toSet -- named
+  }
+
+  test("OCC retry law through the store seam: append, update, delete " +
+      "and mergeInto that lose k races land the uncontended result with " +
+      "no staged debris; 20 losses raise one uniform IOException") {
+    import spark.implicits._
+    val verbs: Seq[(String, String => Any)] = Seq(
+      "append" -> (t => CommitLog.append(spark, t, df((4L, "d", 4.0)))),
+      "update" -> (t => CommitLog.update(spark, t, col("id") <= 2L,
+        Map("v" -> col("v") * 10.0))),
+      "delete" -> (t => CommitLog.delete(spark, t, col("id") === 3L)),
+      "mergeInto" -> (t => CommitLog.mergeInto(spark, t,
+        Seq((2L, "b2", 20.0), (5L, "e", 5.0)).toDF("id", "name", "v"),
+        Seq("id"), whenMatchedUpdate = Map(
+          "name" -> CommitLog.src("name"), "v" -> CommitLog.src("v")))))
+    def seeded(): String = {
+      val t = tmpTable()
+      CommitLog.append(spark, t, df((1L, "a", 1.0), (2L, "b", 2.0)))
+      CommitLog.append(spark, t, df((3L, "c", 3.0)))
+      t
+    }
+    verbs.foreach { case (verb, run) =>
+      val base = seeded()
+      val want = try (run(base), sortedRows(CommitLog.read(spark, base)))
+        finally rm(base)
+      Seq(1, 3).foreach { k =>
+        val t = seeded()
+        val (store, lost) = losingStore(k)
+        try {
+          CommitLog.registerManifestStore(t, store)
+          val got = try run(t) finally CommitLog.unregisterManifestStore(t)
+          assert(lost.get() === k, s"$verb: the store lost $k creates")
+          assert((got, sortedRows(CommitLog.read(spark, t))) === want,
+            s"$verb after $k lost race(s) must equal the uncontended run")
+          assert(unreferenced(t, "data").isEmpty &&
+            unreferenced(t, "_changes").isEmpty,
+            s"$verb after $k lost race(s) left staged debris")
+        } finally rm(t)
+      }
+      val t = seeded()
+      val (store, _) = losingStore(Int.MaxValue)
+      try {
+        CommitLog.registerManifestStore(t, store)
+        val e = try intercept[java.io.IOException](run(t))
+          finally CommitLog.unregisterManifestStore(t)
+        assert(e.getMessage ===
+          s"CommitLog.$verb: lost the version race 20 times at $t")
+        assert(CommitLog.versions(spark, t) === Seq(1L, 2L))
+        assert(unreferenced(t, "data").isEmpty &&
+          unreferenced(t, "_changes").isEmpty,
+          s"$verb: an exhausted budget must drop what it staged")
+      } finally rm(t)
+    }
+  }
+
+  test("installClustered re-asserts a fresh table on every attempt: a " +
+      "concurrent creator that wins v1 makes the build throw and drop " +
+      "its staged segments instead of appending on top of the winner") {
+    val t = tmpTable()
+    val inNested = new ThreadLocal[Boolean] {
+      override def initialValue(): Boolean = false
+    }
+    @volatile var raced = false
+    val store = new CommitLog.ManifestStore {
+      override def createIfAbsent(dst: String,
+          content: Array[Byte]): Boolean =
+        if (!raced && !inNested.get() &&
+            dst.endsWith("00000000000000000001.manifest")) {
+          raced = true
+          inNested.set(true)
+          try CommitLog.append(spark, t, df((9L, "winner", 9.0))): Unit
+          finally inNested.set(false)
+          false // the build lost v1 to the competing creator
+        } else CommitLogSpec.linkCreate(dst, content)
+    }
+    try {
+      CommitLog.registerManifestStore(t, store)
+      val e = try intercept[IllegalStateException] {
+        graft.sources.CommitLogStats.installClustered(spark, t,
+          df((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)),
+          Seq("id"), 2, Seq("id"))
+      } finally CommitLog.unregisterManifestStore(t)
+      assert(raced, "the interleave never happened")
+      assert(e.getMessage.contains("created concurrently"))
+      assert(CommitLog.versions(spark, t) === Seq(1L))
+      assert(sortedRows(CommitLog.read(spark, t)) ===
+        Seq((9L, "winner", 9.0)))
+      // only the winner's segment remains under data/
+      val dirs = Option(new java.io.File(s"$t/data").listFiles).toSeq
+        .flatten.filter(_.isDirectory)
+      assert(dirs.size === 1 && unreferenced(t, "data").isEmpty,
+        s"staged build segments left behind: ${dirs.mkString(", ")}")
+    } finally rm(t)
+  }
+
+  test("manifest codec: segment paths holding ',', ']', '\"' and '\\' " +
+      "round-trip through self-contained, delta and checkpoint records") {
+    val t = tmpTable()
+    val odd = Seq(s"$t/data/a,b", s"$t/data/c]d", s"$t/data/e\"f",
+      s"$t/data/g\\h", s"$t/data/\\\",]\\]")
+    try {
+      val v1 = CommitLog.Snapshot(1L, odd.take(3), 0L, "append")
+      val v2 = CommitLog.Snapshot(2L, odd.drop(1), 1L, "append")
+      assert(CommitLog.tryPublish(spark, t, v1))
+      // v2 keeps a suffix of v1 and adds two: a delta record
+      assert(CommitLog.tryPublish(spark, t, v2, Some(v1)))
+      val txt = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f"$t/_commits/${2L}%020d.manifest")),
+        "UTF-8")
+      assert(txt.contains("\"addSegments\""), txt)
+      assert(CommitLog.snapshot(spark, t, Some(1L)).get.segments ===
+        odd.take(3))
+      assert(CommitLog.snapshot(spark, t).get.segments === odd.drop(1))
+      // single-file checkpoint, then a multi-part one (1 segment/part)
+      CommitLog.checkpoint(spark, t)
+      assert(CommitLog.snapshot(spark, t).get.segments === odd.drop(1))
+      val t2 = tmpTable()
+      spark.conf.set("spark.graft.manifest.checkpointPartSegments", "1")
+      try {
+        assert(CommitLog.tryPublish(spark, t2, v1.copy(segments = odd)))
+        CommitLog.checkpoint(spark, t2)
+        assert(new java.io.File(f"$t2/_commits/${1L}%020d.checkpoint" +
+          s".part-1-of-${odd.size}").exists)
+        assert(CommitLog.snapshot(spark, t2).get.segments === odd)
+      } finally {
+        spark.conf.unset("spark.graft.manifest.checkpointPartSegments")
+        rm(t2)
+      }
+    } finally rm(t)
+  }
+
+  test("convertParquet from a source directory named with ',' and ']' " +
+      "publishes a v1 every later read resolves") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_convcomma_")
+    val src = root.resolve("src,2026]q1").toString
+    val t = root.resolve("tbl").toString
+    try {
+      Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "name", "v")
+        .write.parquet(src)
+      assert(CommitLog.convertParquet(spark, src, t) === 1L)
+      assert(CommitLog.snapshot(spark, t).get.segments === Seq(src))
+      assert(sortedRows(CommitLog.read(spark, t)) ===
+        Seq((1L, "a", 1.0), (2L, "b", 2.0)))
+    } finally rm(t)
+  }
+
   test("SQL UPDATE and MERGE INTO route through the bounded protocol " +
       "executor: clause order, insert conditions, CDC, duplicate-source " +
       "refusal, and loud unsupported shapes") {
@@ -5993,4 +6167,19 @@ object CommitLogSpec {
   /** Emulates the object store's SERVER-SIDE arbitration point for
     * the fake conditional-put store. */
   val fakeStoreLock = new Object
+
+  /** Create-if-absent over the local filesystem, the default store's
+    * primitive: link(2) of a fully written temp file (EEXIST loses). */
+  def linkCreate(dst: String, content: Array[Byte]): Boolean = {
+    val p = java.nio.file.Paths.get(dst)
+    java.nio.file.Files.createDirectories(p.getParent)
+    val tmp = java.nio.file.Files.createTempFile(p.getParent, ".tmp-", "")
+    try {
+      java.nio.file.Files.write(tmp, content)
+      java.nio.file.Files.createLink(p, tmp)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
+    } finally java.nio.file.Files.deleteIfExists(tmp): Unit
+  }
 }
